@@ -2223,12 +2223,11 @@ def u3_spread(spark, sf_dir):
     ).filter(F.col("n") > 0)
     # per-start span count summed with aggregate — the SAME
     # per-start-index enumeration arithmetic as the production
-    # flatten(transform(...struct(s,e))) expression (the inner
-    # transform at start s has exactly least(n, s+L) - s elements),
-    # but without materializing ~n*L struct objects per row only to
-    # size() them (measured 3.6s -> 1.4s at sf1.0; the struct-building
-    # production form itself stays value-checked through the kg chain,
-    # operators/ner.py enumerate_and_spread)
+    # subword.enumerate_spans (start s yields exactly
+    # least(n, s+L) - s spans), but without materializing ~n*L span
+    # objects per row only to size() them (measured 3.6s -> 1.4s at
+    # sf1.0; the enumeration itself stays value-checked through the
+    # kg chain, whose NER UDF calls subword.enumerate_spans)
     num_spans = F.expr(
         f"aggregate(sequence(0, n - 1), cast(0 as bigint), "
         f"(acc, s) -> acc + least(n, s + {L}) - s)"

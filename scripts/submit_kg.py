@@ -18,9 +18,10 @@ Build the --py-files zip with:
 
 Behavior:
   - resumes: pages whose url-bucket already has a 'triples' lineage
-    row are skipped (pending_partitions anti-join), so a re-run after
-    a crash reprocesses only unfinished buckets; per-bucket writes are
-    idempotent (dynamic partition overwrite).
+    row are skipped (pending_partitions anti-join, resolved once at
+    start to a bucket list), so a re-run after a crash reprocesses
+    only unfinished buckets; per-bucket writes are idempotent
+    (dynamic partition overwrite).
   - writes: <out>/triples and <out>/mentions stage tables partitioned
     by bucket(url), one lineage row per written bucket, and a metrics
     row set (pages_in, sentences, mentions, triples) per run.
@@ -51,6 +52,7 @@ def main(argv: list[str] | None = None) -> int:
     # works on the driver via --py-files; ship_package re-ships to
     # executors for local runs started without --py-files.
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     spark = SparkSession.builder.appName("kg_construct").getOrCreate()
 
@@ -63,14 +65,23 @@ def main(argv: list[str] | None = None) -> int:
 
     pages = spark.read.parquet(args.pages)
     keyed = L.with_partition_key(pages, n_buckets=args.n_buckets)
-    pending = L.pending_partitions(keyed, spark, args.out, "triples").drop(
-        "partition_key"
-    )
-    n_pending = pending.count()
+    # resolve the pending buckets ONCE (at most n_buckets rows): a lazy
+    # anti-join would re-read the lineage table on every action, so
+    # the counts taken after this run's 'triples' lineage lands would
+    # see an empty input
+    pending_counts = {
+        r["partition_key"]: r["count"]
+        for r in L.pending_partitions(keyed, spark, args.out, "triples")
+        .groupBy("partition_key").count().collect()
+    }
+    n_pending = sum(pending_counts.values())
     if n_pending == 0:
         print(f"RESUME: all buckets already have 'triples' lineage for {args.out}; "
               "nothing to do")
         return 0
+    pending = keyed.filter(
+        F.col("partition_key").isin(list(pending_counts))
+    ).drop("partition_key")
     print(f"RUN {run_id}: {n_pending} pending pages")
 
     res = run_pipeline(

@@ -149,9 +149,12 @@ class TinySpanEncoder:
             np.asarray(h0.shape[-1], DTYPE)
         )
         scores = np.where(attn_mask, scores, -np.inf)
-        scores = scores - scores.max(axis=-1, keepdims=True)
-        w = np.exp(scores)
-        w = w / w.sum(axis=-1, keepdims=True)
+        # fully masked (padding) rows get zero attention weight rather
+        # than softmaxing -inf - -inf = NaN; other rows are unchanged
+        mx = scores.max(axis=-1, keepdims=True)
+        w = np.exp(scores - np.where(np.isfinite(mx), mx, 0))
+        denom = w.sum(axis=-1, keepdims=True)
+        w = w / np.where(denom > 0, denom, 1)
         h = h0 + (w @ v) @ self.wo
         h = h + np.maximum(h @ self.w1, 0.0) @ self.w2
         h = (h - h.mean(axis=-1, keepdims=True)) / (
@@ -238,8 +241,9 @@ def score_batch(
     """Collate + forward + marker-pair classification + softmax
     (modeling.py:512-530 analogue). Each row dict needs either
     ``gaz_labels`` (per-span gazetteer label id, -1 = no match —
-    computed JVM-side in the production pipeline) or ``span_texts``
-    (lower-cased surfaces, looked up here — the oracle/test path).
+    computed in Python by the NER UDF in the production pipeline) or
+    ``span_texts`` (lower-cased surfaces, looked up here — the
+    oracle/test path).
     Returns per row: (label_ids, scores)."""
     if not rows:
         return []

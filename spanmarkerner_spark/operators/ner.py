@@ -1,21 +1,23 @@
-"""SpanMarker-style NER as Spark stages.
+"""SpanMarker-style NER as one Arrow-batched Spark UDF.
 
-    sentences --tokenize(U2: mapInPandas)--> tokenized
-              --enumerate spans (F2: pure expressions)-->
-              --spread (U3: explode+slice, pure expressions)-->
-              --score (U4+U5: mapInPandas, numpy encoder)--> scored
-              --decode (U6/W3: narrow buffered mapInPandas)--> mentions
+    sentences --ner_mentions (mapInPandas)--> mentions
+
+Per Arrow batch of whole sentences the UDF runs tokenize (U2), span
+enumeration (F2), the spread over the marker budget (U3), collate +
+encoder forward + softmax (U4/U5) and the greedy non-overlap decode
+(U6/W3). `oracle.oracle_mentions` / `oracle.oracle_mentions_context`
+run the same pure functions (subword, model, context_merge) in a
+single process and are the reference the tests pin this UDF against.
 
 Scale notes (100 TB design):
-- tokenize/score/decode are NARROW: after segment_sentences' window
-  (which hash-partitions by url and sorts by sentence_id within
-  partitions), no further shuffle is required through decode — chunks
-  of one sentence stay adjacent in one partition, so decode can
-  stream with a key-change buffer across Arrow batches. A
-  groupBy-based decode (decode_mentions_shuffle) exists as the
-  order-independent fallback.
-- span enumeration and spreading are whole-stage-codegen expressions;
-  the O(n*L) span blow-up never hits a shuffle (SURVEY.md §4).
+- the UDF is NARROW: it needs no shuffle of its own. A sentence's
+  chunks are made, scored and regrouped inside one Arrow batch, so the
+  decode does not depend on row order across batches.
+- with document context, the neighbour gather is a lag/lead window
+  over (url, sentence_id) that rides the pipeline's url repartition
+  and sort (no extra shuffle).
+- the O(n*L) span blow-up happens inside the UDF, after the shuffle,
+  never through it (SURVEY.md §4).
 - the encoder weights are built once per Python worker (module cache),
   not shipped per task.
 
@@ -51,255 +53,10 @@ def _get_encoder(cfg: SpanMarkerConfig) -> TinySpanEncoder:
     return enc
 
 
-# -------------------------------------------------------------------
-# U2: tokenize
-# -------------------------------------------------------------------
-
-def tokenize(sentences: DataFrame, cfg: SpanMarkerConfig) -> DataFrame:
-    """sentences -> TOKENIZED via one Arrow-batched UDF."""
-    vocab, mml = cfg.vocab_size, cfg.model_max_length
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "url", "sentence_id", "tokens", "input_ids", "num_words",
-                "word_tok_start", "word_tok_end", "word_char_start",
-                "word_char_end", "char_offset")}
-            for url, sid, toks, off in zip(
-                pdf["url"], pdf["sentence_id"], pdf["tokens"], pdf["char_offset"]
-            ):
-                words = list(toks)
-                enc = encode_words(words, vocab, mml)
-                if enc["num_words"] == 0:
-                    continue
-                out["url"].append(url)
-                out["sentence_id"].append(sid)
-                out["tokens"].append(words[: enc["num_words"]])
-                out["input_ids"].append(enc["input_ids"])
-                out["num_words"].append(enc["num_words"])
-                out["word_tok_start"].append(enc["word_tok_start"])
-                out["word_tok_end"].append(enc["word_tok_end"])
-                out["word_char_start"].append(enc["word_char_start"])
-                out["word_char_end"].append(enc["word_char_end"])
-                out["char_offset"].append(off)
-            yield pd.DataFrame(out)
-
-    cols = ["url", "sentence_id", "tokens", "char_offset"]
-    return sentences.select(cols).mapInPandas(fn, schema=schemas.TOKENIZED)
-
-
-# -------------------------------------------------------------------
-# F2 + U3: enumerate candidate spans, then spread over marker budget —
-# pure codegen expressions, no Python
-# -------------------------------------------------------------------
-
-def enumerate_and_spread(
-    tokenized: DataFrame,
-    cfg: SpanMarkerConfig,
-    gazetteer: dict[str, int] | None = None,
-) -> DataFrame:
-    """When a gazetteer is given, each chunk also gets a ``gaz_labels``
-    int array (label id per candidate span, -1 = no match) computed
-    with a JVM map literal — keeping the ~O(spans) string work in
-    codegen instead of Python (it dominated the scoring stage)."""
-    L = cfg.entity_max_length
-    total = cfg.total_size
-    mml = cfg.marker_max_length
-
-    spans = F.expr(
-        "flatten(transform(sequence(0, num_words - 1), "
-        f" s -> transform(sequence(s + 1, least(num_words, s + {L})), "
-        "  e -> struct(s, e))))"
-    )
-    df = (
-        tokenized.filter(F.col("num_words") > 0)
-        .withColumn("_spans", spans)
-        .withColumn(
-            "_space",
-            F.least(
-                F.lit(mml),
-                F.floor((F.lit(total) - F.size("input_ids")) / 2).cast("int"),
-            ),
-        )
-        .withColumn(
-            "_chunks",
-            F.ceil(F.size("_spans") / F.col("_space")).cast("int"),
-        )
-    )
-    # 1 -> N: one physical sample per marker-budget chunk
-    # (trainer.py:368-405 semantics, as a pure explode)
-    df = df.withColumn("chunk", F.explode(F.sequence(F.lit(0), F.col("_chunks") - 1)))
-    sl = "slice(_spans, chunk * _space + 1, _space)"
-    df = (
-        df.withColumn("_chunk_spans", F.expr(sl))
-        .withColumn("span_starts", F.expr("transform(_chunk_spans, p -> p.s)"))
-        .withColumn("span_ends", F.expr("transform(_chunk_spans, p -> p.e)"))
-        .withColumn(
-            "start_position_ids",
-            F.expr("transform(_chunk_spans, p -> element_at(word_tok_start, p.s + 1))"),
-        )
-        .withColumn(
-            "end_position_ids",
-            F.expr("transform(_chunk_spans, p -> element_at(word_tok_end, p.e))"),
-        )
-    )
-    if gazetteer:
-        gaz_map = F.create_map(
-            *[F.lit(x) for kv in gazetteer.items() for x in kv]
-        )
-        df = df.withColumn("_gazmap", gaz_map).withColumn(
-            "gaz_labels",
-            F.expr(
-                "transform(_chunk_spans, p -> coalesce(element_at(_gazmap, "
-                "lower(array_join(slice(tokens, p.s + 1, p.e - p.s), ' '))), -1))"
-            ),
-        ).drop("_gazmap")
-    return df.drop("_spans", "_space", "_chunks", "_chunk_spans")
-
-
-# -------------------------------------------------------------------
-# U4 + U5: collate + encoder forward + softmax (one fused UDF)
-# -------------------------------------------------------------------
-
-def score_spans(
-    spread: DataFrame, cfg: SpanMarkerConfig, gazetteer: dict[str, int]
-) -> DataFrame:
-    gaz = dict(gazetteer)  # only the oracle fallback path uses this
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc = _get_encoder(cfg)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = [
-                {
-                    "input_ids": iids,
-                    "start_position_ids": sp,
-                    "end_position_ids": ep,
-                    "gaz_labels": gl,
-                    "span_lens": se - ss,
-                }
-                for iids, sp, ep, gl, ss, se in zip(
-                    pdf["input_ids"], pdf["start_position_ids"],
-                    pdf["end_position_ids"], pdf["gaz_labels"],
-                    pdf["span_starts"], pdf["span_ends"],
-                )
-            ]
-            scored = score_batch(enc, rows, gaz, cfg)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "sentence_id": pdf["sentence_id"],
-                    "chunk": pdf["chunk"],
-                    "span_starts": pdf["span_starts"],
-                    "span_ends": pdf["span_ends"],
-                    "label_ids": [s[0] for s in scored],
-                    "scores": [s[1] for s in scored],
-                    "tokens": pdf["tokens"],
-                    "word_char_start": pdf["word_char_start"],
-                    "word_char_end": pdf["word_char_end"],
-                    "char_offset": pdf["char_offset"],
-                }
-            )
-
-    cols = [
-        "url", "sentence_id", "chunk", "tokens", "input_ids",
-        "span_starts", "span_ends", "start_position_ids",
-        "end_position_ids", "gaz_labels", "word_char_start",
-        "word_char_end", "char_offset",
-    ]
-    return spread.select(cols).mapInPandas(fn, schema=schemas.SCORED)
-
-
-# -------------------------------------------------------------------
-# U6 / W3: greedy non-overlap decode
-# -------------------------------------------------------------------
-
-_DECODE_COLS = [
-    "url", "sentence_id", "span_starts", "span_ends", "label_ids",
-    "scores", "tokens", "word_char_start", "word_char_end", "char_offset",
-]
-
-
-def _decode_sentence(rows: list[tuple], cfg: SpanMarkerConfig) -> list[dict]:
-    """Merge a sentence's chunks (tuples in _DECODE_COLS order),
-    greedy-select, emit mention dicts."""
-    url, sid = rows[0][0], rows[0][1]
-    cand: list[tuple[int, int, int, float]] = []
-    for r in rows:
-        cand.extend(zip(r[2], r[3], r[4], r[5]))
-    kept = greedy_decode(cand, cfg.outside_id)
-    if not kept:
-        return []
-    toks = list(rows[0][6])
-    wcs, wce, off = rows[0][7], rows[0][8], rows[0][9]
-    out = []
-    for s, e, lab, sc in kept:
-        out.append(
-            {
-                "url": url,
-                "sentence_id": int(sid),
-                "span": " ".join(toks[s:e]),
-                "label": cfg.reduced_labels[lab],
-                "score": float(sc),
-                "word_start_index": int(s),
-                "word_end_index": int(e),
-                "char_start_index": int(off + wcs[s]),
-                "char_end_index": int(off + wce[e - 1]),
-            }
-        )
-    return out
-
-
-def decode_mentions(scored: DataFrame, cfg: SpanMarkerConfig) -> DataFrame:
-    """NARROW decode: scored chunks of one sentence are adjacent within
-    a partition (explode + mapInPandas preserve order), so buffer rows
-    per (url, sentence_id) across Arrow batch boundaries and flush on
-    key change — zero extra shuffle (SURVEY.md §7.3 batch-boundary
-    hazard handled by the carry buffer)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[tuple] = []
-        key: tuple | None = None
-        pending: list[dict] = []
-        for pdf in batches:
-            cols = [pdf[c].to_numpy() for c in _DECODE_COLS]
-            for row in zip(*cols):
-                k = (row[0], row[1])
-                if k != key and buf:
-                    pending.extend(_decode_sentence(buf, cfg))
-                    buf = []
-                key = k
-                buf.append(row)
-            if pending:
-                yield pd.DataFrame(pending, columns=_MENTION_COLS)
-                pending = []
-        if buf:
-            pending.extend(_decode_sentence(buf, cfg))
-        if pending:
-            yield pd.DataFrame(pending, columns=_MENTION_COLS)
-
-    return scored.mapInPandas(fn, schema=schemas.MENTIONS)
-
-
 _MENTION_COLS = [f.name for f in schemas.MENTIONS.fields]
 
 
-def decode_mentions_shuffle(scored: DataFrame, cfg: SpanMarkerConfig) -> DataFrame:
-    """Order-independent decode via groupBy + applyInPandas — the
-    fallback when upstream adjacency cannot be guaranteed (e.g. input
-    read back from an unsorted table)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(zip(*[pdf[c].to_numpy() for c in _DECODE_COLS]))
-        return pd.DataFrame(_decode_sentence(rows, cfg), columns=_MENTION_COLS)
-
-    return scored.groupBy("url", "sentence_id").applyInPandas(
-        fn, schema=schemas.MENTIONS
-    )
-
-
-def ner_mentions_fused(
+def ner_mentions(
     sentences: DataFrame,
     cfg: SpanMarkerConfig,
     gazetteer: dict[str, int],
@@ -309,15 +66,15 @@ def ner_mentions_fused(
     -> chunk over the marker budget -> collate+score -> greedy decode,
     per Arrow batch of whole sentences.
 
-    Why fused: the staged operators chain three mapInPandas calls that
-    Spark fuses into one STAGE but with one PYTHON WORKER PER UDF per
-    task — at local[32] that is ~96 workers + 32 JVM threads, 4-5x
-    core oversubscription, measured 18x CPU inflation per row. Fused,
-    each task runs exactly one worker and ships (tokens in, mentions
+    Why one UDF: a staged chain of three mapInPandas calls runs in one
+    Spark STAGE but with one PYTHON WORKER PER UDF per task — at
+    local[32] that is ~96 workers + 32 JVM threads, 4-5x core
+    oversubscription, measured 18x CPU inflation per row. Fused, each
+    task runs exactly one worker and ships (tokens in, mentions
     out) through Arrow once. This mirrors the reference's own fusion
     (modeling.py:466-574: one tokenizer call, one scoring loop, decode
     per sentence). Chunks of a sentence never cross batches here, so
-    decode needs no carry buffer.
+    the decode regroups them within the batch.
 
     context_window > 0 enables document context (W1, the reference's
     predict() with document_id present, modeling.py:474-492 +
@@ -474,31 +231,3 @@ def ner_mentions_fused(
             ]),
         )
     return staged.mapInPandas(fn, schema=schemas.MENTIONS)
-
-
-def ner_mentions(
-    sentences: DataFrame,
-    cfg: SpanMarkerConfig,
-    gazetteer: dict[str, int],
-    narrow_decode: bool = True,
-    fused: bool = True,
-    context_window: int = 0,
-) -> DataFrame:
-    """sentences -> mentions, the full U2..U6 chain. fused=True (the
-    production path) runs one UDF; fused=False runs the staged
-    operators (used by tests to pin stage semantics). context_window
-    enables the reference's document-context mode (W1)."""
-    if fused:
-        return ner_mentions_fused(
-            sentences, cfg, gazetteer, context_window=context_window
-        )
-    tok = tokenize(sentences, cfg)
-    if context_window > 0:
-        from spanmarkerner_spark.operators.context import add_document_context
-
-        tok = add_document_context(tok, cfg, window_size=context_window)
-    spread = enumerate_and_spread(tok, cfg, gazetteer)
-    scored = score_spans(spread, cfg, gazetteer)
-    if narrow_decode:
-        return decode_mentions(scored, cfg)
-    return decode_mentions_shuffle(scored, cfg)

@@ -827,24 +827,17 @@ def append_ivf_index(
     sinks). Readers are unchanged: ivf_topk_from_index's bucket
     filter still prunes whole bucket directories; the extra epoch
     column rides along and is dropped by column pruning."""
-    spark = new_vecs.sparkSession
     out = new_vecs.select(
         F.col(id_col), F.col(vec_col),
         sign_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
         F.lit(int(epoch_id)).alias("epoch_id"),
     )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy(
-            "bucket", "epoch_id"
-        ).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket", "epoch_id")
+        .parquet(path)
+    )
 
 
 def sq_topk(

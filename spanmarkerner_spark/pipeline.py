@@ -3,7 +3,7 @@
 pages(url, warc_ts, html, text, lang)
   -> extract (JVM expr, byte-identical per url)
   -> segment (posexplode + window offset)
-  -> ner_mentions (tokenize/spread/score/decode)
+  -> ner_mentions (one Arrow UDF: tokenize/spread/score/decode)
   -> link_mentions (broadcast alias join + rerank)
   -> canonicalize (connected components over shared-entity edges)
   -> extract_relations (pair self-join + broadcast pattern join)
@@ -12,8 +12,8 @@ pages(url, warc_ts, html, text, lang)
 Partitioning: one explicit repartition on hash(url) on the PAGES
 frame, before segmentation — the segmentation window (partitionBy
 url) runs on that exchange instead of adding its own, its (url,
-sentence_id) sort doubles as the narrow decode's adjacency order, and
-every later stage is either narrow (tokenize, spread, score, decode)
+sentence_id) sort doubles as the order of the document-context
+lag/lead window, and every later stage is either narrow (the NER UDF)
 or joins on keys prefixed by url. The whole mentions plan is exactly
 one Exchange + one Sort (pinned by tests). At 100 TB the same plan
 holds: url-hash is ~uniform (no hot key), AQE splits stragglers, and
@@ -136,7 +136,7 @@ def run_pipeline(
         # the single deliberate shuffle, BEFORE segmentation: the
         # segment window (partitionBy url) then runs on this exchange
         # instead of adding its own, and the window's (url,
-        # sentence_id) sort doubles as the narrow decode's adjacency
+        # sentence_id) sort doubles as the document-context lag/lead
         # order — one shuffle + one sort total where the previous plan
         # had two of each (segment window exchange+sort, then
         # repartition + sortWithinPartitions)
@@ -166,16 +166,17 @@ def run_pipeline(
         sentences, cfg, gaz, context_window=doc_context_window
     )
     linked = link_mentions(mentions, alias_df)
-    if persist_stages:
-        # persist ONLY the post-NER diamond point. Do NOT persist
-        # sentences: an InMemoryTableScan feeding mapInPandas degrades
-        # the Arrow batch granularity and measured 2-18x slower than
-        # recomputing the (cheap, codegen'd) segmentation; relations
-        # re-derives sentence tokens instead.
-        linked = linked.persist()
-
     if canonicalize:
         linked = apply_canonicalize(linked, alias_df)
+    if persist_stages:
+        # persist ONLY the post-NER diamond point, after canonicalize,
+        # so the returned 'linked' is the cached frame and its
+        # unpersist() frees the block. Do NOT persist sentences: an
+        # InMemoryTableScan feeding mapInPandas degrades the Arrow
+        # batch granularity and measured 2-18x slower than recomputing
+        # the (cheap, codegen'd) segmentation; relations re-derives
+        # sentence tokens instead.
+        linked = linked.persist()
 
     triples = extract_relations(linked, sentences, patterns)
     return {

@@ -256,35 +256,28 @@ def encode_micro_batch(
         prior = sp.createDataFrame([], "term string, tid long")
     full = extend_dictionary(prior, batch_df, buckets=buckets)
     fresh = full.join(prior.select("term"), "term", "left_anti")
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, "dynamic")
-    try:
-        (
-            fresh.withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .parquet(dict_dir)
+    (
+        fresh.withColumn("epoch", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch")
+        .parquet(dict_dir)
+    )
+    encoded = (
+        batch_df.join(
+            full.select(F.col("term").alias("subj"), F.col("tid").alias("s_id")),
+            "subj",
         )
-        encoded = (
-            batch_df.join(
-                full.select(F.col("term").alias("subj"), F.col("tid").alias("s_id")),
-                "subj",
-            )
-            .join(
-                full.select(F.col("term").alias("obj"), F.col("tid").alias("o_id")),
-                "obj",
-            )
-            .select("s_id", "pred", "o_id")
+        .join(
+            full.select(F.col("term").alias("obj"), F.col("tid").alias("o_id")),
+            "obj",
         )
-        (
-            encoded.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
+        .select("s_id", "pred", "o_id")
+    )
+    (
+        encoded.withColumn("epoch_id", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(out_dir)
+    )

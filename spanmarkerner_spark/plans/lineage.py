@@ -32,24 +32,17 @@ def _overwrite_partitioned(
     df: DataFrame, out: str, part_col: str | list[str]
 ) -> None:
     """Dynamic-partition-overwrite write shared by both lineage
-    grains (and by the compaction / IVF-index / backfill writers —
-    one copy of the conf-juggling so the restore logic can't drift).
-    The overwrite mode is RESTORED afterwards — setting it
-    session-globally would silently turn an unrelated later
-    full-table overwrite elsewhere in the session into a partial
-    (dynamic) one."""
+    grains and the compaction writer. The mode is a per-write option,
+    never the session conf: setting it session-globally would silently
+    turn an unrelated later full-table overwrite elsewhere in the
+    session into a partial (dynamic) one."""
     cols = [part_col] if isinstance(part_col, str) else list(part_col)
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*cols).parquet(out)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(out)
+    )
 
 
 def with_partition_key(df: DataFrame, key_col: str = "url",

@@ -39,53 +39,6 @@ SENTENCES = T.StructType(
     ]
 )
 
-# ---- tokenized sentences (U2 output; tokenizer.py:256-266 analogue) --
-TOKENIZED = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sentence_id", T.IntegerType(), False),
-        T.StructField("tokens", T.ArrayType(T.StringType()), False),
-        T.StructField("input_ids", T.ArrayType(T.IntegerType()), False),
-        T.StructField("num_words", T.IntegerType(), False),
-        # word i -> first/last subword token index
-        T.StructField("word_tok_start", T.ArrayType(T.IntegerType()), False),
-        T.StructField("word_tok_end", T.ArrayType(T.IntegerType()), False),
-        # word i -> char span within the sentence
-        T.StructField("word_char_start", T.ArrayType(T.IntegerType()), False),
-        T.StructField("word_char_end", T.ArrayType(T.IntegerType()), False),
-        T.StructField("char_offset", T.IntegerType(), False),
-    ]
-)
-
-# ---- physical samples after spreading (U3) ---------------------------
-SPREAD = T.StructType(
-    list(TOKENIZED.fields)
-    + [
-        T.StructField("chunk", T.IntegerType(), False),
-        T.StructField("span_starts", T.ArrayType(T.IntegerType()), False),
-        T.StructField("span_ends", T.ArrayType(T.IntegerType()), False),
-        T.StructField("start_position_ids", T.ArrayType(T.IntegerType()), False),
-        T.StructField("end_position_ids", T.ArrayType(T.IntegerType()), False),
-    ]
-)
-
-# ---- scored candidate spans (U4+U5 output) ---------------------------
-SCORED = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sentence_id", T.IntegerType(), False),
-        T.StructField("chunk", T.IntegerType(), False),
-        T.StructField("span_starts", T.ArrayType(T.IntegerType()), False),
-        T.StructField("span_ends", T.ArrayType(T.IntegerType()), False),
-        T.StructField("label_ids", T.ArrayType(T.IntegerType()), False),
-        T.StructField("scores", T.ArrayType(T.DoubleType()), False),
-        T.StructField("tokens", T.ArrayType(T.StringType()), False),
-        T.StructField("word_char_start", T.ArrayType(T.IntegerType()), False),
-        T.StructField("word_char_end", T.ArrayType(T.IntegerType()), False),
-        T.StructField("char_offset", T.IntegerType(), False),
-    ]
-)
-
 # ---- decoded mentions (modeling.py:551-564 analogue) -----------------
 MENTIONS = T.StructType(
     [

@@ -45,13 +45,12 @@ def stream_pages_to_triples(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         res = run_pipeline(batch_df, persist_stages=True, **pipeline_kwargs)
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             (
                 res["triples"]
                 .withColumn("epoch_id", F.lit(int(epoch_id)))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("epoch_id")
                 .parquet(out_dir)
             )
@@ -397,21 +396,13 @@ def curate_micro_batch(
             "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
         ):
             raise
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, "dynamic")
-    try:
-        (
-            kept.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
+    (
+        kept.withColumn("epoch_id", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(out_dir)
+    )
 
 
 def stream_curated_docs(
@@ -698,22 +689,13 @@ def backfill_near_dup_index(
     # band_keys references the (now materialized) sh_h COLUMN — the
     # shingle transform cannot be re-inlined across the checkpoint
     kept = base.withColumn("band_keys", band_keys)
-    sp = docs.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, "dynamic")
-    try:
-        (
-            kept.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
+    (
+        kept.withColumn("epoch_id", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(out_dir)
+    )
 
 
 def link_graph_micro_batch(
@@ -727,12 +709,11 @@ def link_graph_micro_batch(
     semantics are directly testable, like curate_micro_batch."""
     from spanmarkerner_spark.operators.linkgraph import extract_links, host_graph
 
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         host_graph(extract_links(batch_df))
         .withColumn("epoch_id", F.lit(int(epoch_id)))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("epoch_id")
         .parquet(out_dir)
     )

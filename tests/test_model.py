@@ -5,6 +5,7 @@ semantics, data_collator.py:52-130) on the marker hidden states."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
 from spanmarkerner_spark.model import (
@@ -14,6 +15,10 @@ from spanmarkerner_spark.model import (
     score_batch,
 )
 from spanmarkerner_spark.subword import encode_words, enumerate_spans
+
+# a numpy RuntimeWarning (e.g. NaN from an all-masked softmax row) is a
+# bug in the model code, not noise
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 
 def _rows(cfg, sentences):
@@ -99,3 +104,15 @@ def test_gazetteer_drives_labels():
     assert by_span[(1, 3)][0] == person       # "john smith"
     assert by_span[(4, 5)][0] == location     # "paris"
     assert by_span[(0, 1)][0] == cfg.outside_id  # "yesterday"
+
+
+def test_forward_full_padding_rows_are_finite():
+    """collate_full pads every row to total_size; the padding rows'
+    attention mask is all False and must give zero weight, not NaN."""
+    cfg = SpanMarkerConfig(labels=KG_LABELS)
+    enc = TinySpanEncoder(cfg)
+    input_ids, position_ids, attn, _, _ = collate_full(
+        _rows(cfg, ["paris".split()]), cfg
+    )
+    assert not attn[0].any(axis=-1).all()  # the batch has padding rows
+    assert np.isfinite(enc.forward_full(input_ids, position_ids, attn)).all()

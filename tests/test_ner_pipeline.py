@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
 from spanmarkerner_spark.datagen import extract_text_py, gen_pages, text_to_html
-from spanmarkerner_spark.functions.text import segment_sentences, with_extracted_text
+from spanmarkerner_spark.functions.text import segment_sentences
 from spanmarkerner_spark.model import greedy_decode
 from spanmarkerner_spark.oracle import precision_recall, run_oracle
 from spanmarkerner_spark.pipeline import run_pipeline
@@ -82,9 +82,16 @@ def test_mentions_match_oracle(result, oracle):
         "word_start_index", "word_end_index",
         "char_start_index", "char_end_index",
     ]
-    spark_m = {tuple(r[c] for c in cols) for r in result["mentions"].collect()}
+    spark_scores = {
+        tuple(r[c] for c in cols): r["score"] for r in result["mentions"].collect()
+    }
     oracle_m = {tuple(m[c] for c in cols) for m in oracle["mentions"]}
-    assert spark_m == oracle_m
+    assert set(spark_scores) == oracle_m
+    # scores agree to float tolerance (the pipeline scores chunks in
+    # large collated batches, the oracle row-by-row — numpy reduction
+    # order differs in the last ulps)
+    for m in oracle["mentions"]:
+        assert abs(spark_scores[tuple(m[c] for c in cols)] - m["score"]) < 1e-6
 
 
 def test_triples_pr_vs_oracle(result, oracle):
@@ -93,31 +100,16 @@ def test_triples_pr_vs_oracle(result, oracle):
     assert p >= 0.95 and r >= 0.95, (p, r, len(tri), len(oracle["triples"]))
 
 
-def test_narrow_and_shuffle_decode_agree(pages_df, result):
-    from spanmarkerner_spark.datagen import gazetteer
-    from spanmarkerner_spark.operators.ner import (
-        enumerate_and_spread,
-        decode_mentions_shuffle,
-        score_spans,
-        tokenize,
+def test_persisted_linked_is_the_returned_frame(pages_df):
+    """persist_stages caches the 'linked' frame run_pipeline returns
+    (after canonicalize), so the callers' unpersist() frees it."""
+    res = run_pipeline(
+        pages_df, num_partitions=8, persist_stages=True, canonicalize=True
     )
-
-    cfg = SpanMarkerConfig(labels=KG_LABELS)
-    pages = with_extracted_text(pages_df)
-    sents = segment_sentences(pages, text_col="extracted_text")
-    gaz = gazetteer(cfg)
-    scored = score_spans(
-        enumerate_and_spread(tokenize(sents, cfg), cfg, gaz), cfg, gaz
-    )
-    shuffled = {
-        (r["url"], r["sentence_id"], r["word_start_index"], r["word_end_index"], r["label"])
-        for r in decode_mentions_shuffle(scored, cfg).collect()
-    }
-    narrow = {
-        (r["url"], r["sentence_id"], r["word_start_index"], r["word_end_index"], r["label"])
-        for r in result["mentions"].collect()
-    }
-    assert shuffled == narrow
+    try:
+        assert res["linked"].is_cached
+    finally:
+        res["linked"].unpersist()
 
 
 def test_lang_filter_prunes(pages_df):
@@ -160,24 +152,6 @@ def test_greedy_decode_tiebreak_deterministic():
     spans = [(2, 4, 1, 0.5), (0, 2, 1, 0.5), (1, 3, 2, 0.5)]
     # equal scores -> earlier start wins first, overlapping (1,3) dropped
     assert greedy_decode(spans, 0) == [(0, 2, 1, 0.5), (2, 4, 1, 0.5)]
-
-
-def test_fused_matches_staged(pages_df):
-    from spanmarkerner_spark.datagen import gazetteer
-    from spanmarkerner_spark.operators.ner import ner_mentions
-
-    cfg = SpanMarkerConfig(labels=KG_LABELS)
-    gaz = gazetteer(cfg)
-    pages = with_extracted_text(pages_df)
-    sents = segment_sentences(pages, text_col="extracted_text")
-    key = lambda r: (  # noqa: E731
-        r["url"], r["sentence_id"], r["word_start_index"],
-        r["word_end_index"], r["label"], round(r["score"], 9),
-        r["char_start_index"], r["char_end_index"], r["span"],
-    )
-    fused = {key(r) for r in ner_mentions(sents, cfg, gaz, fused=True).collect()}
-    staged = {key(r) for r in ner_mentions(sents, cfg, gaz, fused=False).collect()}
-    assert fused == staged
 
 
 def test_duplicate_urls_deduped_deterministically(spark, pages_rows):

@@ -254,34 +254,6 @@ def test_context_merge_budget():
     assert shift == 2
 
 
-def test_add_document_context(spark):
-    from spanmarkerner_spark.config import KG_LABELS
-    from spanmarkerner_spark.datagen import text_to_html
-    from spanmarkerner_spark.functions.text import segment_sentences
-    from spanmarkerner_spark.operators.context import add_document_context
-    from spanmarkerner_spark.operators.ner import tokenize
-    from spanmarkerner_spark import schemas as S
-
-    cfg = SpanMarkerConfig(labels=KG_LABELS)
-    text = "one two . three four . five six"
-    df = spark.createDataFrame(
-        [("u", None, text_to_html(text, "u"), text, "en")], schema=S.PAGES
-    )
-    tok = tokenize(segment_sentences(df), cfg)
-    ctx = add_document_context(tok, cfg, window_size=2)
-    rows = {r["sentence_id"]: r for r in ctx.collect()}
-    base = {r["sentence_id"]: r for r in tok.collect()}
-    # middle sentence gains both neighbors' bodies (2 tokens each)
-    assert len(rows[1]["input_ids"]) == len(base[1]["input_ids"]) + 4
-    # its word alignment shifted by the prepended length
-    shift = rows[1]["word_tok_start"][0] - base[1]["word_tok_start"][0]
-    assert shift == 2
-    # alignment still points at the same token ids
-    for wi in range(2):
-        s = rows[1]["word_tok_start"][wi]
-        assert rows[1]["input_ids"][s] == base[1]["input_ids"][base[1]["word_tok_start"][wi]]
-
-
 # ---------------- lineage / resume ----------------
 
 def test_lineage_resume(spark):
@@ -2219,6 +2191,35 @@ def test_stream_pages_to_host_graph_batch_equivalence(spark, tmp_path):
         for r in host_graph_from_epochs(spark, out).collect()
     }
     assert retry == batch
+
+
+def test_link_graph_micro_batch_keeps_session_overwrite_mode(spark, tmp_path):
+    """The epoch write's dynamic overwrite is a per-write option: it
+    holds under a STATIC session conf, and leaves that conf as it was
+    (a leaked 'dynamic' would turn a later full-table overwrite
+    elsewhere in the session into a partial one)."""
+    from spanmarkerner_spark import schemas
+    from spanmarkerner_spark.streaming.ingest import link_graph_micro_batch
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        html = b'<a href="https://b.org/x">a</a>'
+        batch = spark.createDataFrame(
+            [("https://a.org/p", None, html, "", "en")], schema=schemas.PAGES
+        )
+        out = str(tmp_path / "hg")
+        link_graph_micro_batch(batch, 0, out)
+        link_graph_micro_batch(batch, 1, out)
+        assert spark.conf.get(key) == "static"
+        epochs = spark.read.parquet(out).select("epoch_id").distinct().collect()
+        assert {r["epoch_id"] for r in epochs} == {0, 1}
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_entity_type_majority_vote_and_minority_share(spark):

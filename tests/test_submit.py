@@ -5,6 +5,9 @@ a second submit is a full resume no-op."""
 
 from __future__ import annotations
 
+import contextlib
+import importlib.util
+import io
 import os
 import shutil
 import subprocess
@@ -95,6 +98,62 @@ def test_spark_submit_pyfiles_end_to_end(spark):
         assert "RESUME: all buckets already have 'triples' lineage" in out2
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resumed_run_metrics_match_oracle(spark, tmp_path):
+    """A resumed run's _metrics rows count the pages it processed:
+    the pending input is fixed at start, so the counts taken after its
+    own 'triples' lineage lands still see it (not an empty input)."""
+    from pyspark.sql import functions as F
+
+    from spanmarkerner_spark import schemas
+    from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
+    from spanmarkerner_spark.datagen import gen_pages
+    from spanmarkerner_spark.oracle import run_oracle
+    from spanmarkerner_spark.plans import lineage as L
+
+    spec = importlib.util.spec_from_file_location(
+        "submit_kg", os.path.join(REPO, "scripts", "submit_kg.py")
+    )
+    submit_kg = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(submit_kg)
+
+    rows = gen_pages(12, seed=5)
+    n_buckets = 4
+    all_dir, first_dir, out = (str(tmp_path / d) for d in ("all", "first", "kg"))
+    spark.createDataFrame(rows, schema=schemas.PAGES).write.parquet(all_dir)
+    first = L.with_partition_key(spark.read.parquet(all_dir), n_buckets=n_buckets)
+    first.filter(F.col("partition_key") < n_buckets // 2).drop(
+        "partition_key"
+    ).write.parquet(first_dir)
+    first_urls = {r["url"] for r in spark.read.parquet(first_dir).collect()}
+
+    for run_id, src in (("first", first_dir), ("resume", all_dir)):
+        with contextlib.redirect_stdout(io.StringIO()):
+            rc = submit_kg.main([
+                "--pages", src, "--out", out, "--run-id", run_id,
+                "--n-buckets", str(n_buckets),
+            ])
+        assert rc == 0
+
+    resumed = [r for r in rows if r[0] not in first_urls]
+    assert resumed and len(resumed) < len(rows)
+    urls = {r[0] for r in resumed}
+    oracle = run_oracle(rows, SpanMarkerConfig(labels=KG_LABELS), use_extracted=False)
+    want = {
+        "pages_in": len(resumed),
+        "sentences": sum(
+            1 for r in resumed for s in r[3].split(" . ") if s.strip(" ")
+        ),
+        "mentions": sum(1 for m in oracle["mentions"] if m["url"] in urls),
+        "triples": sum(1 for t in oracle["triples"] if t[3] in urls),
+    }
+    assert want["mentions"] > 0 and want["triples"] > 0
+    got = {
+        r["metric"]: int(r["value"])
+        for r in L.read_metrics(spark, out).filter("run_id = 'resume'").collect()
+    }
+    assert {k: got.get(k) for k in want} == want
 
 
 def test_spark_submit_curate_end_to_end(spark):
